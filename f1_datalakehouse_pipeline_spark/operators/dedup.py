@@ -599,6 +599,8 @@ def connected_keepers(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
     )
     from pyspark.sql import Observation
 
+    from f1_datalakehouse_pipeline_spark.operators.util import observed_or
+
     converged = False
     for _ in range(max_iterations):
         neighbor_min = (
@@ -640,22 +642,19 @@ def connected_keepers(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
         # and no probe-side join/broadcast at all. Same labels, same
         # convergence decision (labels hold one row per doc, so "any row
         # where keeper != _prev" is exactly the old joined predicate).
+        # `_prev` rides through the checkpoint so an unreadable metric (a
+        # round folded to an empty relation) recomputes the same predicate
+        # from the checkpoint instead of assuming convergence; max over
+        # zero rows is NULL, which recomputes to 0 (converged) as well.
         obs = Observation()
-        new_labels = (
-            updated.observe(
-                obs, F.max((F.col("keeper") != F.col("_prev")).cast("int")).alias("chg")
-            )
-            .drop("_prev")
-            .localCheckpoint(eager=True)  # truncate lineage per round
+        round_ckpt = updated.observe(
+            obs, F.max((F.col("keeper") != F.col("_prev")).cast("int")).alias("chg")
+        ).localCheckpoint(eager=True)  # truncate lineage per round
+        labels = round_ckpt.drop("_prev")
+        chg = observed_or(
+            obs, "chg",
+            lambda: round_ckpt.filter(F.col("keeper") != F.col("_prev")).limit(1).count(),
         )
-        labels = new_labels
-        try:
-            # max over zero rows is NULL == converged; a round the optimizer
-            # folded to an EMPTY relation runs zero tasks and records an
-            # inconvertible empty metrics row — also zero rows, converged.
-            chg = obs.get.get("chg") or 0
-        except Exception:
-            chg = 0
         if chg == 0:
             converged = True
             break

@@ -2,8 +2,38 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import logging
+from typing import Callable
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
+
+
+def observed_or(obs: Observation, key: str, recompute: Callable[[], int]) -> int:
+    """The value ``obs`` observed under ``key``, or ``recompute()`` when it
+    observed none. The one reader of every ``observe()`` metric the engine
+    trusts for a count or a decision.
+
+    An Observation reports on the FIRST action over its frame only (later
+    actions over the same plan never update it), so callers attach it to
+    the action that materializes the frame and read it right after. Reading
+    can still fail: a stage that ran zero tasks (a plan the optimizer folded
+    to an empty relation) can leave a schema-less metrics row that
+    ``Observation.get`` cannot convert. That case, a missing key and a
+    metric that came back NULL fall back to ``recompute`` — which must
+    derive the value from materialized data (a count of the checkpoint or
+    the written table), never assume one — and the fallback is logged.
+    """
+    try:
+        value = obs.get.get(key)
+    except Exception:  # noqa: BLE001 — every unreadable metric recomputes
+        value = None
+    if value is None:
+        log.info("observed metric %r unavailable; recomputing it", key)
+        return recompute()
+    return value
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

@@ -22,13 +22,15 @@ build runs, wired from the engine's own oracle-verified operators:
       → shard delivery      (sources/shards.write_training_shards:
                              seeded shuffle + verifiable manifest)
 
-Every stage is a DataFrame transform (no collect, no Python row loops); the
-only driver-side values are the per-stage counts in the report, each a
-single aggregate action. Stage order is deliberate: cheap row-local filters
-(quality, scrub) run before the shuffling dedup stages so the joins see the
-smallest corpus; decontamination runs after dedup so the benchmark index
-probes unique docs only; chunking runs last because near-dup detection on
-full documents beats detection on fragments.
+Every stage is a DataFrame transform (no collect, no Python row loops)
+ending in an eager local checkpoint (``_stage``), which cuts the lineage at
+the stage boundary; the only driver-side values are the per-stage counts in
+the report, each observed on the checkpoint's own action. Stage order is
+deliberate: cheap row-local filters (quality, scrub) run before the
+shuffling dedup stages so the joins see the smallest corpus;
+decontamination runs after dedup so the benchmark index probes unique docs
+only; chunking runs last because near-dup detection on full documents
+beats detection on fragments.
 
 Chunk ids compose (doc_id << chunk_shift) | chunk_idx — collision-free
 while docs stay under 2^chunk_shift chunks (default shift 12 → 4096 chunks,
@@ -51,6 +53,7 @@ from f1_datalakehouse_pipeline_spark.functions.pii import scrub_pii
 from f1_datalakehouse_pipeline_spark.functions.text import portable_hash48, quality_score
 from f1_datalakehouse_pipeline_spark.operators import dedup
 from f1_datalakehouse_pipeline_spark.operators.textstats import chunk_documents
+from f1_datalakehouse_pipeline_spark.operators.util import observed_or
 from f1_datalakehouse_pipeline_spark.sources.shards import (
     append_training_shards,
     verify_training_shards,
@@ -100,9 +103,9 @@ def corpus_drift_reference(docs: DataFrame, content_col: str = "text", *, n_buck
 
 def _manifest_and_audit(spark: SparkSession, out_root: str, rep: "CorpusReport") -> None:
     """Shared delivery epilogue: read the manifest back from the parquet the
-    sink just wrote (collecting the in-flight DataFrame would re-execute the
-    pipeline lineage once the stage caches are gone) and run the integrity
-    audit. One definition so the batch and incremental reports cannot drift."""
+    sink just wrote (what was delivered, not a re-execution of the sink's
+    shuffle) and run the integrity audit. One definition so the batch and
+    incremental reports cannot drift."""
     from f1_datalakehouse_pipeline_spark.sources.shards import read_shard_manifest
 
     rep.shard_manifest = sorted(
@@ -235,6 +238,39 @@ def compose_chunk_id(id_col: str, idx_col: str, shift: int = 12):
     return F.when(bad, F.raise_error(msg)).otherwise(doc * F.lit(1 << shift) + idx)
 
 
+def _stage(df: DataFrame, counts: dict[str, int], key: str | None = None) -> DataFrame:
+    """Materialize one corpus stage and cut its lineage there: the next
+    stage plans from a ``LogicalRDD`` leaf, not from the whole chain above.
+
+    Every stage joins its input with something derived from that same input
+    (keepers, pairs, leaks), so a plan that keeps its lineage roughly
+    triples per stage — measured 5 → 2,103 analyzed-plan lines from quality
+    to chunks — and every later action re-analyzes the whole tree. The eager
+    local checkpoint also computes the stage once although the next stage
+    reads it twice.
+
+    ``key`` names the stage's row count in ``counts``. The count comes from
+    an ``observe()`` on the stage whose first and only action is the
+    checkpoint, read right away through :func:`observed_or`; an unreadable
+    count is taken by counting the checkpoint instead.
+
+    Trade-off: checkpoint blocks live in the executors' block managers only.
+    On a cluster a lost executor fails the run loudly instead of recomputing
+    the stage (as ``dedup.connected_keepers``' round checkpoints do); Spark's
+    ContextCleaner releases the blocks once nothing references the frame.
+    Checkpoints are not CacheManager entries, so a later write to a path a
+    stage read cannot re-materialize the stage or serve stale rows from it.
+    """
+    obs = None
+    if key is not None:
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    df = df.localCheckpoint(eager=True)
+    if obs is not None:
+        counts[key] = int(observed_or(obs, "n", df.count))
+    return df
+
+
 def run_corpus_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -290,179 +326,116 @@ def run_corpus_pipeline(
     _require_integral_id(docs, id_col)
     rep = CorpusReport()
 
-    # Each shuffling stage consumes its input at least twice (the dedup
-    # pair-computation AND the semi/anti-join back), so stage boundaries are
-    # cached — without this every second branch recomputes the whole
-    # upstream lineage (measured: 141.5 s → see PERF_NOTES r4
-    # composed-pipeline rung).
-    # The unpersist runs in a finally: a stage that raises must not leak its
-    # caches — a lingering cached plan that reads a state/output path would
-    # silently serve STALE data to a later run in the same session (writes
-    # into new partition subdirs do not invalidate a parent-dir cache).
-    #
-    # r12 (guide §1.2/§5: fewer actions = fewer full passes of scheduling):
-    # the per-stage report counts used to be one count() ACTION per stage;
-    # they now ride OBSERVED metrics attached under each stage cache and are
-    # resolved after the chunk count — the single action that materializes
-    # the whole chain — so N stages cost one materializing pass instead of
-    # N+1 sequential jobs. observe(count) over a cached stage fires exactly
-    # once (on cache fill, whichever action causes it) and count(lit(1)) is
-    # the same aggregate count() ran, so the report values are identical.
-    cached: list[DataFrame] = []
-    pending: dict[str, tuple[Observation, DataFrame]] = {}
-
-    def checkpoint_stage(df: DataFrame, count_key: str | None = None) -> DataFrame:
-        obs = None
-        if count_key is not None:
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        df = df.cache()
-        cached.append(df)
-        if obs is not None:
-            pending[count_key] = (obs, df)
-        return df
-
-    def resolve_counts() -> None:
-        # Observation.get blocks until its metric arrives; every pending
-        # stage sits below the chunk count in lineage, so by the time this
-        # runs each has already fired. Caveat: a stage the optimizer folded
-        # into an EMPTY relation materializes with zero tasks, so its
-        # CollectMetrics accumulator never updates and Spark records a
-        # schema-less empty row that Observation.get cannot convert — fall
-        # back to counting the (materialized, empty) cache: one trivial job,
-        # and only on all-rows-rejected stages.
-        for key, (obs, df) in pending.items():
-            try:
-                n = obs.get.get("n")
-            except Exception:
-                n = None
-            rep.counts[key] = int(n) if n is not None else df.count()
-        pending.clear()
-
-    # the raw count rides the quality stage's materialization too
     raw_obs = Observation()
-    docs = docs.observe(raw_obs, F.count(F.lit(1)).alias("n"))
-    pending["raw"] = (raw_obs, docs)
+    kept = _stage(
+        docs.observe(raw_obs, F.count(F.lit(1)).alias("n"))
+        .filter(quality_score(F.col(content_col)) >= quality_min)
+        .withColumn(content_col, scrub_pii(F.col(content_col))),
+        rep.counts, "after_quality",
+    )
+    # the raw count rode the quality stage's checkpoint; it leads the report
+    rep.counts = {"raw": observed_or(raw_obs, "n", docs.count), **rep.counts}
 
-    try:
-        kept = checkpoint_stage(
-            docs.filter(quality_score(F.col(content_col)) >= quality_min)
-            .withColumn(content_col, scrub_pii(F.col(content_col))),
-            "after_quality",
-        )
+    exact = dedup.exact_dedup(kept, id_col, content_col).select(
+        F.col("keeper_id").alias(id_col)
+    )
+    kept = _stage(kept.join(exact, id_col, "left_semi"), rep.counts, "after_exact_dedup")
 
-        exact = dedup.exact_dedup(kept, id_col, content_col).select(
-            F.col("keeper_id").alias(id_col)
-        )
-        kept = checkpoint_stage(
-            kept.join(exact, id_col, "left_semi"), "after_exact_dedup"
-        )
+    pairs = dedup.minhash_lsh_pairs(
+        kept, id_col, content_col,
+        threshold=near_threshold, max_doc_frequency=max_doc_frequency,
+    )
+    kept = _stage(dedup.apply_dedup(kept, id_col, pairs), rep.counts, "after_near_dedup")
 
-        pairs = dedup.minhash_lsh_pairs(
-            kept, id_col, content_col,
-            threshold=near_threshold, max_doc_frequency=max_doc_frequency,
-        )
-        kept = checkpoint_stage(
-            dedup.apply_dedup(kept, id_col, pairs), "after_near_dedup"
-        )
-
-        if containment_threshold is not None:
-            # Subset-duplication pass: symmetric near-dedup above already
-            # removed high-Jaccard pairs; this drops each remaining pair's
-            # CONTAINED doc (the smaller shingle set), keeping the
-            # superset's extra content.
-            contained = (
-                dedup.shingle_containment_pairs(
-                    kept, id_col, content_col,
-                    threshold=containment_threshold,
-                    max_doc_frequency=max_doc_frequency,
-                )
-                .select(F.col("contained_doc").alias(id_col))
-                .distinct()
-            )
-            kept = checkpoint_stage(
-                kept.join(contained, id_col, "left_anti"),
-                "after_containment_dedup",
-            )
-
-        if semantic_eps is not None:
-            # Meaning-level dedup after the text-level passes (rewordings
-            # and translations the shingle family cannot see). Embeddings
-            # restricted to survivors before any assignment work; docs
-            # without an embedding row pass through untouched.
-            emb_kept = (
-                embeddings.select(
-                    F.col(semantic_vec_id_col).cast("long").alias(id_col),
-                    F.col(semantic_vec_col).alias(semantic_vec_col),
-                )
-                .join(kept.select(id_col), id_col, "left_semi")
-            )
-            sem_removed = (
-                dedup.semantic_dedup_flags(
-                    emb_kept, id_col, semantic_vec_col,
-                    semantic_centroids, semantic_eps,
-                    lsh_planes=semantic_lsh_planes,
-                )
-                .filter(~F.col("kept"))
-                .select(id_col)
-            )
-            kept = checkpoint_stage(
-                kept.join(sem_removed, id_col, "left_anti"),
-                "after_semantic_dedup",
-            )
-
-        if benchmark is not None:
-            leaks = dedup.contamination_pairs(
-                kept, benchmark, id_col, content_col,
-                min_containment=contamination_min,
+    if containment_threshold is not None:
+        # Subset-duplication pass: symmetric near-dedup above already
+        # removed high-Jaccard pairs; this drops each remaining pair's
+        # CONTAINED doc (the smaller shingle set), keeping the
+        # superset's extra content.
+        contained = (
+            dedup.shingle_containment_pairs(
+                kept, id_col, content_col,
+                threshold=containment_threshold,
                 max_doc_frequency=max_doc_frequency,
-            ).select(F.col("train_id").alias(id_col)).distinct()
-            kept = checkpoint_stage(
-                kept.join(leaks, id_col, "left_anti"), "after_decontamination"
             )
-
-        if domain_col is not None and domain_budgets is not None:
-            # Mixture runs after all cleaning so budgets are spent on docs
-            # that will actually ship, and before chunking so budgets count
-            # document tokens, not overlap-inflated chunk tokens.
-            from f1_datalakehouse_pipeline_spark.functions.text import token_count
-            from f1_datalakehouse_pipeline_spark.operators.mixture import budgeted_mixture
-
-            admitted = budgeted_mixture(
-                kept.withColumn("__n_tokens", token_count(F.col(content_col))),
-                id_col,
-                domain_col,
-                "__n_tokens",
-                domain_budgets,
-                seed=f"{seed}-mix",
-            ).select(id_col)
-            kept = checkpoint_stage(
-                kept.join(admitted, id_col, "left_semi"), "after_mixture"
-            )
-
-        chunks = checkpoint_stage(
-            chunk_documents(
-                kept, id_col, content_col, chunk_tokens, overlap_tokens
-            ).select(
-                compose_chunk_id(id_col, "chunk_idx", chunk_shift).alias("chunk_id"),
-                F.col("chunk_text"),
-            )
+            .select(F.col("contained_doc").alias(id_col))
+            .distinct()
         )
-        # THE materializing action: executes every stage above (filling the
-        # caches) and fires every pending stage-count observation.
-        n_chunks = chunks.count()
-        resolve_counts()
-        rep.counts["chunks"] = n_chunks
+        kept = _stage(
+            kept.join(contained, id_col, "left_anti"),
+            rep.counts, "after_containment_dedup",
+        )
 
-        if rep.counts["chunks"] == 0:
-            # Every doc was filtered out. A zero-row partitionBy write would
-            # leave a data/ dir with no partition files, which no later read
-            # (audit, append) can infer a schema from — deliver nothing.
-            return rep
-        write_training_shards(chunks, "chunk_id", "chunk_text", out_root, n_shards, seed)
-    finally:
-        for df in cached:
-            df.unpersist()
+    if semantic_eps is not None:
+        # Meaning-level dedup after the text-level passes (rewordings
+        # and translations the shingle family cannot see). Embeddings
+        # restricted to survivors before any assignment work; docs
+        # without an embedding row pass through untouched.
+        emb_kept = (
+            embeddings.select(
+                F.col(semantic_vec_id_col).cast("long").alias(id_col),
+                F.col(semantic_vec_col).alias(semantic_vec_col),
+            )
+            .join(kept.select(id_col), id_col, "left_semi")
+        )
+        sem_removed = (
+            dedup.semantic_dedup_flags(
+                emb_kept, id_col, semantic_vec_col,
+                semantic_centroids, semantic_eps,
+                lsh_planes=semantic_lsh_planes,
+            )
+            .filter(~F.col("kept"))
+            .select(id_col)
+        )
+        kept = _stage(
+            kept.join(sem_removed, id_col, "left_anti"),
+            rep.counts, "after_semantic_dedup",
+        )
+
+    if benchmark is not None:
+        leaks = dedup.contamination_pairs(
+            kept, benchmark, id_col, content_col,
+            min_containment=contamination_min,
+            max_doc_frequency=max_doc_frequency,
+        ).select(F.col("train_id").alias(id_col)).distinct()
+        kept = _stage(
+            kept.join(leaks, id_col, "left_anti"), rep.counts, "after_decontamination"
+        )
+
+    if domain_col is not None and domain_budgets is not None:
+        # Mixture runs after all cleaning so budgets are spent on docs
+        # that will actually ship, and before chunking so budgets count
+        # document tokens, not overlap-inflated chunk tokens.
+        from f1_datalakehouse_pipeline_spark.functions.text import token_count
+        from f1_datalakehouse_pipeline_spark.operators.mixture import budgeted_mixture
+
+        admitted = budgeted_mixture(
+            kept.withColumn("__n_tokens", token_count(F.col(content_col))),
+            id_col,
+            domain_col,
+            "__n_tokens",
+            domain_budgets,
+            seed=f"{seed}-mix",
+        ).select(id_col)
+        kept = _stage(
+            kept.join(admitted, id_col, "left_semi"), rep.counts, "after_mixture"
+        )
+
+    chunks = _stage(
+        chunk_documents(
+            kept, id_col, content_col, chunk_tokens, overlap_tokens
+        ).select(
+            compose_chunk_id(id_col, "chunk_idx", chunk_shift).alias("chunk_id"),
+            F.col("chunk_text"),
+        ),
+        rep.counts, "chunks",
+    )
+    if rep.counts["chunks"] == 0:
+        # Every doc was filtered out. A zero-row partitionBy write would
+        # leave a data/ dir with no partition files, which no later read
+        # (audit, append) can infer a schema from — deliver nothing.
+        return rep
+    write_training_shards(chunks, "chunk_id", "chunk_text", out_root, n_shards, seed)
     _manifest_and_audit(spark, out_root, rep)
     return rep
 
@@ -685,328 +658,271 @@ def run_corpus_pipeline_incremental(
     # the exact gate makes the replay reproduce the original verdicts.
     replaying_partial = os.path.isdir(tok_dir) and not os.path.exists(marker)
 
-    # finally-scoped like the batch form: a stage that raises must not leak
-    # caches — a crashed run's lingering cached anti-join would serve stale
-    # verdicts to the in-session replay this function's crash contract
-    # exists for (partition-subdir writes don't invalidate parent-dir
-    # caches, so Spark never refreshes the stale entry itself).
-    #
-    # r12: per-stage report counts ride observed metrics under the stage
-    # caches (same design and rationale as the batch form above) and resolve
-    # after the chunk count — the per-batch action count drops by one job
-    # per stage with identical report values. The gating values this
-    # function branches on (chunks, n_admitted) are only needed AFTER that
-    # materializing action, so control flow is unchanged.
-    cached: list[DataFrame] = []
-    pending: dict[str, tuple[Observation, DataFrame]] = {}
+    if wap_checks:
+        from f1_datalakehouse_pipeline_spark.streaming.quality_gate import (
+            audit_split,
+        )
 
-    def checkpoint_stage(df: DataFrame, count_key: str | None = None) -> DataFrame:
-        obs = None
-        if count_key is not None:
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        df = df.cache()
-        cached.append(df)
-        if obs is not None:
-            pending[count_key] = (obs, df)
-        return df
+        critical = wap_critical or set()
+        unknown = critical - set(wap_checks)
+        if unknown:
+            raise ValueError(
+                f"wap_critical names not in wap_checks: {sorted(unknown)}"
+            )
+        audited = _stage(batch, rep.counts)
+        clean, quarantined, metrics = audit_split(audited, wap_checks)
+        mrows = metrics.collect()  # bounded: one row per declared check
+        rep.wap_metrics = {
+            r["check_name"]: (r["violations"], r["total"]) for r in mrows
+        }
+        crit_hit = any(
+            r["check_name"] in critical and r["violations"] > 0
+            for r in mrows
+        )
 
-    def resolve_counts() -> None:
-        # same empty-stage fallback as the batch form above: a stage folded
-        # to an empty relation runs zero tasks and records an inconvertible
-        # empty metrics row — count the materialized cache instead.
-        for key, (obs, df) in pending.items():
-            try:
-                n = obs.get.get("n")
-            except Exception:
-                n = None
-            rep.counts[key] = int(n) if n is not None else df.count()
-        pending.clear()
-
-    try:
-        if wap_checks:
+        def _wap_sink(df: DataFrame, path: str) -> None:
+            # idempotent per-batch sink: replay overwrites its own
+            # batch_token partition — THE SAME writer as the streaming
+            # gate's sinks (one implementation of the overwrite
+            # semantics, so a future fix lands in both gates at once)
             from f1_datalakehouse_pipeline_spark.streaming.quality_gate import (
-                audit_split,
+                _overwrite_batch,
             )
 
-            critical = wap_critical or set()
-            unknown = critical - set(wap_checks)
-            if unknown:
-                raise ValueError(
-                    f"wap_critical names not in wap_checks: {sorted(unknown)}"
-                )
-            audited = checkpoint_stage(batch)
-            clean, quarantined, metrics = audit_split(audited, wap_checks)
-            mrows = metrics.collect()  # bounded: one row per declared check
-            rep.wap_metrics = {
-                r["check_name"]: (r["violations"], r["total"]) for r in mrows
-            }
-            crit_hit = any(
-                r["check_name"] in critical and r["violations"] > 0
-                for r in mrows
-            )
+            _overwrite_batch(df, batch_token, path, stamp_col="batch_token")
 
-            def _wap_sink(df: DataFrame, path: str) -> None:
-                # idempotent per-batch sink: replay overwrites its own
-                # batch_token partition — THE SAME writer as the streaming
-                # gate's sinks (one implementation of the overwrite
-                # semantics, so a future fix lands in both gates at once)
-                from f1_datalakehouse_pipeline_spark.streaming.quality_gate import (
-                    _overwrite_batch,
-                )
-
-                _overwrite_batch(df, batch_token, path, stamp_col="batch_token")
-
+        _wap_sink(
+            spark.createDataFrame(
+                [
+                    (r["check_name"], r["violations"], r["total"], crit_hit)
+                    for r in mrows
+                ],
+                "check_name string, violations long, total long, "
+                "batch_quarantined boolean",
+            ),
+            os.path.join(state_root, "wap_metrics"),
+        )
+        if crit_hit:
+            # audit failed: quarantine the WHOLE batch; deliver nothing,
+            # touch no state, leave the manifest byte-identical
             _wap_sink(
-                spark.createDataFrame(
-                    [
-                        (r["check_name"], r["violations"], r["total"], crit_hit)
-                        for r in mrows
-                    ],
-                    "check_name string, violations long, total long, "
-                    "batch_quarantined boolean",
+                quarantined.unionByName(
+                    clean.withColumn(
+                        "violated_checks", F.array().cast("array<string>")
+                    )
                 ),
-                os.path.join(state_root, "wap_metrics"),
+                os.path.join(state_root, "quarantine"),
             )
-            if crit_hit:
-                # audit failed: quarantine the WHOLE batch; deliver nothing,
-                # touch no state, leave the manifest byte-identical
-                _wap_sink(
-                    quarantined.unionByName(
-                        clean.withColumn(
-                            "violated_checks", F.array().cast("array<string>")
-                        )
-                    ),
-                    os.path.join(state_root, "quarantine"),
-                )
-                rep.wap_batch_quarantined = True
-                rep.wap_quarantined = rep.counts["raw"]
-                return rep
-            rep.wap_quarantined = quarantined.count()
-            if rep.wap_quarantined:
-                _wap_sink(quarantined, os.path.join(state_root, "quarantine"))
-            batch = clean
+            rep.wap_batch_quarantined = True
+            rep.wap_quarantined = rep.counts["raw"]
+            return rep
+        rep.wap_quarantined = quarantined.count()
+        if rep.wap_quarantined:
+            _wap_sink(quarantined, os.path.join(state_root, "quarantine"))
+        batch = clean
 
-        kept = checkpoint_stage(
-            batch.filter(quality_score(F.col(content_col)) >= quality_min)
-            .withColumn(content_col, scrub_pii(F.col(content_col))),
-            "after_quality",
+    kept = _stage(
+        batch.filter(quality_score(F.col(content_col)) >= quality_min)
+        .withColumn(content_col, scrub_pii(F.col(content_col))),
+        rep.counts, "after_quality",
+    )
+
+    # exact: within-batch keepers, then drop hashes already admitted
+    keepers = dedup.exact_dedup(kept, id_col, content_col).select(
+        F.col("keeper_id").alias(id_col)
+    )
+    kept = kept.join(keepers, id_col, "left_semi")
+    if os.path.isdir(exact_dir):
+        seen = spark.read.parquet(exact_dir)
+        if replaying_partial:
+            # partition-pruned at the scan: the batch's own
+            # half-committed hashes never reach the anti-join
+            seen = seen.filter(F.col("batch_token") != batch_token)
+        kept = kept.join(
+            seen,
+            portable_hash48(F.col(content_col)) == seen.content_hash,
+            "left_anti",
         )
+    kept = _stage(kept, rep.counts, "after_exact_dedup")
 
-        # exact: within-batch keepers, then drop hashes already admitted
-        keepers = dedup.exact_dedup(kept, id_col, content_col).select(
-            F.col("keeper_id").alias(id_col)
-        )
-        kept = kept.join(keepers, id_col, "left_semi")
-        if os.path.isdir(exact_dir):
-            seen = spark.read.parquet(exact_dir)
-            if replaying_partial:
-                # partition-pruned at the scan: the batch's own
-                # half-committed hashes never reach the anti-join
-                seen = seen.filter(F.col("batch_token") != batch_token)
-            kept = kept.join(
-                seen,
-                portable_hash48(F.col(content_col)) == seen.content_hash,
-                "left_anti",
-            )
-        kept = checkpoint_stage(kept, "after_exact_dedup")
-
-        # near: batch self-join + history index probe (batch-proportional)
-        pairs = dedup.minhash_lsh_pairs(
-            kept, id_col, content_col,
+    # near: batch self-join + history index probe (batch-proportional)
+    pairs = dedup.minhash_lsh_pairs(
+        kept, id_col, content_col,
+        threshold=near_threshold, max_doc_frequency=max_doc_frequency,
+    )
+    kept = dedup.apply_dedup(kept, id_col, pairs)
+    index = _read_index(spark, lsh_dir)
+    if index is not None:
+        hits = dedup.novelty_pairs(
+            kept, index, id_col, content_col,
             threshold=near_threshold, max_doc_frequency=max_doc_frequency,
         )
-        kept = dedup.apply_dedup(kept, id_col, pairs)
-        index = _read_index(spark, lsh_dir)
-        if index is not None:
-            hits = dedup.novelty_pairs(
-                kept, index, id_col, content_col,
-                threshold=near_threshold, max_doc_frequency=max_doc_frequency,
-            )
-            kept = dedup.filter_novel(kept, hits, id_col)
-        kept = checkpoint_stage(kept, "after_near_dedup")
+        kept = dedup.filter_novel(kept, hits, id_col)
+    kept = _stage(kept, rep.counts, "after_near_dedup")
 
-        if semantic_eps is not None:
-            # Assignment computed ONCE per batch (cached: the within-batch
-            # pair join reads it twice and the history probe once);
-            # embeddings restricted to survivors first, so rows the text
-            # gates already dropped never reach the cosine work.
-            emb_kept = (
-                embeddings.select(
-                    F.col(semantic_vec_id_col).cast("long").alias(id_col),
-                    F.col(semantic_vec_col).alias(semantic_vec_col),
-                )
-                .join(kept.select(id_col), id_col, "left_semi")
+    if semantic_eps is not None:
+        # Assignment computed ONCE per batch (checkpointed: the
+        # within-batch pair join reads it twice, the history probe and the
+        # semantic state append once each); embeddings restricted to
+        # survivors first, so rows the text gates already dropped never
+        # reach the cosine work.
+        emb_kept = (
+            embeddings.select(
+                F.col(semantic_vec_id_col).cast("long").alias(id_col),
+                F.col(semantic_vec_col).alias(semantic_vec_col),
             )
-            asg = checkpoint_stage(
-                dedup.semantic_assignment(
-                    emb_kept, id_col, semantic_vec_col, semantic_centroids
-                )
+            .join(kept.select(id_col), id_col, "left_semi")
+        )
+        asg = _stage(
+            dedup.semantic_assignment(
+                emb_kept, id_col, semantic_vec_col, semantic_centroids
+            ),
+            rep.counts,
+        )
+        within_removed = (
+            dedup.semantic_dedup_flags(
+                asg.withColumnRenamed("_v", semantic_vec_col),
+                id_col, semantic_vec_col, None, semantic_eps,
+                lsh_planes=semantic_lsh_planes,
             )
-            within_removed = (
-                dedup.semantic_dedup_flags(
-                    asg.withColumnRenamed("_v", semantic_vec_col),
-                    id_col, semantic_vec_col, None, semantic_eps,
+            .filter(~F.col("kept"))
+            .select(id_col)
+        )
+        sem_removed = within_removed
+        if _has_member_partitions(semantic_dir):
+            hist = spark.read.parquet(semantic_dir)
+            if replaying_partial:
+                # same partition-pruned exclusion as the exact gate:
+                # the batch's own half-committed members never probe
+                # against themselves
+                hist = hist.filter(F.col("batch_token") != batch_token)
+            sem_removed = within_removed.unionByName(
+                dedup.semantic_history_hits(
+                    asg, hist, id_col, semantic_eps,
                     lsh_planes=semantic_lsh_planes,
                 )
-                .filter(~F.col("kept"))
-                .select(id_col)
             )
-            sem_removed = within_removed
-            if _has_member_partitions(semantic_dir):
-                hist = spark.read.parquet(semantic_dir)
-                if replaying_partial:
-                    # same partition-pruned exclusion as the exact gate:
-                    # the batch's own half-committed members never probe
-                    # against themselves
-                    hist = hist.filter(F.col("batch_token") != batch_token)
-                sem_removed = within_removed.unionByName(
-                    dedup.semantic_history_hits(
-                        asg, hist, id_col, semantic_eps,
-                        lsh_planes=semantic_lsh_planes,
-                    )
-                )
-            kept = checkpoint_stage(
-                kept.join(sem_removed.distinct(), id_col, "left_anti"),
-                "after_semantic_dedup",
-            )
-
-        if benchmark is not None:
-            leaks = dedup.contamination_pairs(
-                kept, benchmark, id_col, content_col,
-                min_containment=contamination_min,
-                max_doc_frequency=max_doc_frequency,
-            ).select(F.col("train_id").alias(id_col)).distinct()
-            kept = checkpoint_stage(
-                kept.join(leaks, id_col, "left_anti"), "after_decontamination"
-            )
-
-        chunks = checkpoint_stage(
-            chunk_documents(
-                kept, id_col, content_col, chunk_tokens, overlap_tokens
-            ).select(
-                compose_chunk_id(id_col, "chunk_idx", chunk_shift).alias("chunk_id"),
-                F.col("chunk_text"),
-            )
+        kept = _stage(
+            kept.join(sem_removed.distinct(), id_col, "left_anti"),
+            rep.counts, "after_semantic_dedup",
         )
-        # THE materializing action of the batch: fills every stage cache and
-        # fires every pending stage-count observation.
-        n_chunks = chunks.count()
-        resolve_counts()
-        rep.counts["chunks"] = n_chunks
 
-        from f1_datalakehouse_pipeline_spark.sources.shards import MANIFEST_DIR
+    if benchmark is not None:
+        leaks = dedup.contamination_pairs(
+            kept, benchmark, id_col, content_col,
+            min_containment=contamination_min,
+            max_doc_frequency=max_doc_frequency,
+        ).select(F.col("train_id").alias(id_col)).distinct()
+        kept = _stage(
+            kept.join(leaks, id_col, "left_anti"), rep.counts, "after_decontamination"
+        )
 
-        have_shards = os.path.isdir(os.path.join(out_root, MANIFEST_DIR))
-        if rep.counts["chunks"] > 0:
-            # A zero-chunk batch delivers nothing (a zero-row FIRST write
-            # would poison out_root with a schema-less partitioned dir) but
-            # still extends state below: its admitted docs must reject
-            # later dups.
-            if have_shards:
-                append_training_shards(chunks, "chunk_id", "chunk_text", out_root, seed)
-            else:
-                write_training_shards(
-                    chunks, "chunk_id", "chunk_text", out_root, n_shards, seed
-                )
-            have_shards = True
+    chunks = _stage(
+        chunk_documents(
+            kept, id_col, content_col, chunk_tokens, overlap_tokens
+        ).select(
+            compose_chunk_id(id_col, "chunk_idx", chunk_shift).alias("chunk_id"),
+            F.col("chunk_text"),
+        ),
+        rep.counts, "chunks",
+    )
 
-        # extend state LAST (same ordering rationale as streaming/novelty's
-        # admit_batch: a crash between the shard append and the state append
-        # re-runs a batch the state has not seen — the re-run recomputes the
-        # same verdicts, and the residue is duplicate delivery of that ONE
-        # batch; state-FIRST would instead make the re-run reject the whole
-        # batch against its own half-written state and silently lose it).
-        #
-        # The admitted rows are STAGED to a lineage-free parquet first:
-        # `kept`'s plan READS exact_dir and the LSH index dirs, and Spark
-        # re-materializes path-dependent caches on append
-        # (CacheManager.recacheByPath) — so appending state directly from
-        # `kept` re-runs its anti-join against state that now includes this
-        # batch's OWN hashes, evaluates empty, and the second append writes
-        # nothing, silently truncating the LSH index to batch 1
-        # (regression-tested: it takes THREE batches to observe).
-        n_admitted = rep.counts.get(
-            "after_decontamination",
-            rep.counts.get(
-                "after_semantic_dedup", rep.counts["after_near_dedup"]
+    from f1_datalakehouse_pipeline_spark.sources.shards import MANIFEST_DIR
+
+    have_shards = os.path.isdir(os.path.join(out_root, MANIFEST_DIR))
+    if rep.counts["chunks"] > 0:
+        # A zero-chunk batch delivers nothing (a zero-row FIRST write
+        # would poison out_root with a schema-less partitioned dir) but
+        # still extends state below: its admitted docs must reject
+        # later dups.
+        if have_shards:
+            append_training_shards(chunks, "chunk_id", "chunk_text", out_root, seed)
+        else:
+            write_training_shards(
+                chunks, "chunk_id", "chunk_text", out_root, n_shards, seed
+            )
+        have_shards = True
+
+    # extend state LAST (same ordering rationale as streaming/novelty's
+    # admit_batch: a crash between the shard append and the state append
+    # re-runs a batch the state has not seen — the re-run recomputes the
+    # same verdicts, and the residue is duplicate delivery of that ONE
+    # batch; state-FIRST would instead make the re-run reject the whole
+    # batch against its own half-written state and silently lose it).
+    #
+    # The admitted rows are STAGED to parquet first. `kept` is a
+    # checkpoint, so its verdicts are frozen: the state appends below
+    # cannot re-run its anti-joins against state that already holds this
+    # batch's OWN hashes (which would write nothing and silently truncate
+    # the LSH index — regression-tested, it takes THREE batches to
+    # observe). The staging stays for layout: the staged scan's file split,
+    # not the checkpoint's AQE-coalesced partitioning, sets the parallelism
+    # and so the file layout of the state writes, which the state stores
+    # were sized and tested with (see the staging note below).
+    n_admitted = rep.counts.get(
+        "after_decontamination",
+        rep.counts.get(
+            "after_semantic_dedup", rep.counts["after_near_dedup"]
+        ),
+    )
+    if n_admitted > 0:
+        import shutil
+
+        staging = os.path.join(state_root, "_batch_staging")
+        # staging is NOT _sized: it is transient (removed at the commit
+        # marker) so its file count never accumulates, and its partition
+        # count is the parallelism of every downstream state build —
+        # coalescing it to one file was measured to blow the LSH band
+        # index write up 12 → 384 files (the 1-partition input changes
+        # the band pipeline's AQE layout) while saving nothing durable.
+        kept.select(id_col, content_col).write.mode("overwrite").parquet(staging)
+        kept_s = spark.read.parquet(staging)
+        # The exact-hash delta goes into this batch's OWN partition with
+        # mode=overwrite: a crash-replay that re-reaches this point
+        # rewrites the identical rows instead of double-appending.
+        _sized(
+            kept_s.select(
+                portable_hash48(F.col(content_col)).alias("content_hash")
             ),
-        )
-        if n_admitted > 0:
-            import shutil
-
-            staging = os.path.join(state_root, "_batch_staging")
-            # staging is NOT _sized: it is transient (removed at the commit
-            # marker) so its file count never accumulates, and its partition
-            # count is the parallelism of every downstream state build —
-            # coalescing it to one file was measured to blow the LSH band
-            # index write up 12 → 384 files (the 1-partition input changes
-            # the band pipeline's AQE layout) while saving nothing durable.
-            kept.select(id_col, content_col).write.mode("overwrite").parquet(staging)
-            kept_s = spark.read.parquet(staging)
-            # The exact-hash delta goes into this batch's OWN partition with
-            # mode=overwrite: a crash-replay that re-reaches this point
-            # rewrites the identical rows instead of double-appending.
-            _sized(
-                kept_s.select(
-                    portable_hash48(F.col(content_col)).alias("content_hash")
-                ),
-                n_admitted,
-            ).write.mode("overwrite").parquet(tok_dir)
-            if semantic_eps is not None:
-                # Admitted members' (id, cluster_id, vector) extend the
-                # semantic history. Recomputed from the lineage-free staged
-                # ids + the caller's embeddings table (NOT from `asg`, whose
-                # plan reads exact_dir — by this point that store already
-                # holds this batch's own hashes, and a recache-triggered
-                # re-evaluation would anti-join the batch against itself
-                # and write an empty member set; same hazard as the LSH
-                # append below). One assignment pass over the admitted
-                # embeddings, own-token partition, overwrite = replay-safe.
-                emb_admitted = (
-                    embeddings.select(
-                        F.col(semantic_vec_id_col).cast("long").alias(id_col),
-                        F.col(semantic_vec_col).alias(semantic_vec_col),
-                    )
-                    .join(kept_s.select(id_col), id_col, "left_semi")
-                )
-                asg_admitted = dedup.semantic_assignment(
-                    emb_admitted, id_col, semantic_vec_col, semantic_centroids
-                )
-                sem_tok_dir = os.path.join(
-                    semantic_dir, f"batch_token={batch_token}"
-                )
-                # A zero-row partition write would leave a schema-less dir;
-                # only materialize when some admitted doc has an embedding.
-                if asg_admitted.limit(1).count() > 0:
-                    # REBALANCE, not _sized (r12; r11 rejected coalesce here
-                    # because it narrows upstream parallelism to the file
-                    # count and this write's input is the O(n·k·d)
-                    # assignment itself): the rebalance shuffle sits AFTER
-                    # the assignment compute, so assignment keeps full
-                    # parallelism while the write lands AQE-advisory-sized
-                    # files instead of one per assignment partition per
-                    # batch. compact_corpus_state remains the deep repair.
-                    asg_admitted.hint("rebalance").write.mode(
-                        "overwrite"
-                    ).parquet(sem_tok_dir)
-            _append_index(
-                lsh_dir,
-                dedup.minhash_band_index(
-                    kept_s, id_col, content_col, max_doc_frequency=max_doc_frequency
-                ),
-                shingle_buckets=shingle_buckets,
+            n_admitted,
+        ).write.mode("overwrite").parquet(tok_dir)
+        if semantic_eps is not None:
+            # Admitted members' (id, cluster_id, vector) extend the
+            # semantic history: the checkpointed assignment restricted to
+            # the admitted ids (no second assignment pass), own-token
+            # partition, overwrite = replay-safe.
+            asg_admitted = asg.join(kept_s.select(id_col), id_col, "left_semi")
+            sem_tok_dir = os.path.join(
+                semantic_dir, f"batch_token={batch_token}"
             )
-            # Commit marker LAST: its presence means both state stores hold
-            # this batch, so any later replay runs the normal gates and is
-            # rejected whole at the exact stage.
-            os.makedirs(os.path.dirname(marker), exist_ok=True)
-            with open(marker, "w") as fh:
-                fh.write(str(n_admitted))
-            shutil.rmtree(staging, ignore_errors=True)
-    finally:
-        for df in cached:
-            df.unpersist()
+            # A zero-row partition write would leave a schema-less dir;
+            # only materialize when some admitted doc has an embedding.
+            if asg_admitted.limit(1).count() > 0:
+                # REBALANCE, not _sized (r12; r11 rejected coalesce here
+                # because it narrows upstream parallelism to the file
+                # count and this write's input is the O(n·k·d)
+                # assignment itself): the rebalance shuffle sits AFTER
+                # the assignment compute, so assignment keeps full
+                # parallelism while the write lands AQE-advisory-sized
+                # files instead of one per assignment partition per
+                # batch. compact_corpus_state remains the deep repair.
+                asg_admitted.hint("rebalance").write.mode(
+                    "overwrite"
+                ).parquet(sem_tok_dir)
+        _append_index(
+            lsh_dir,
+            dedup.minhash_band_index(
+                kept_s, id_col, content_col, max_doc_frequency=max_doc_frequency
+            ),
+            shingle_buckets=shingle_buckets,
+        )
+        # Commit marker LAST: its presence means both state stores hold
+        # this batch, so any later replay runs the normal gates and is
+        # rejected whole at the exact stage.
+        os.makedirs(os.path.dirname(marker), exist_ok=True)
+        with open(marker, "w") as fh:
+            fh.write(str(n_admitted))
+        shutil.rmtree(staging, ignore_errors=True)
 
     if not have_shards or not audit:  # nothing delivered yet / caller audits out-of-band
         return rep

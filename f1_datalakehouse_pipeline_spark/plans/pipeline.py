@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from f1_datalakehouse_pipeline_spark.functions.names import normalize_grand_prix_name
 from f1_datalakehouse_pipeline_spark.operators.scd2 import scd2_merge_incremental
+from f1_datalakehouse_pipeline_spark.operators.util import observed_or
 from f1_datalakehouse_pipeline_spark.plans import gold, silver
 from f1_datalakehouse_pipeline_spark.sources.bronze import read_bronze
 from f1_datalakehouse_pipeline_spark.sources.tables import TableStore
@@ -61,19 +62,18 @@ def detect_latest_grand_prix(spark: SparkSession, bronze_root: str, year: int) -
 
 def _write_observed(store: TableStore, df: DataFrame, table: str, mode: str, report: RunReport) -> None:
     obs = Observation(f"rows_{table}")
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     if mode == HISTORICAL and table == "drivers_silver":
-        store.overwrite(df, table)
-    elif mode == HISTORICAL:
-        # full-year rebuild still scopes to the partitions in the batch
-        store.overwrite_partitions(df, table)
-    elif table == "championship_tracker":
-        # always fully recomputed: running totals are season-cumulative
-        # (f1_silver_to_gold_transform.py:209-217)
-        store.overwrite_partitions(df, table)
+        store.overwrite(observed, table)
     else:
-        store.overwrite_partitions(df, table)
-    report.row_counts[table] = obs.get["rows"]
+        # partition-scoped: a HISTORICAL rebuild replaces the year's
+        # partitions, INCREMENTAL the GP's; season-wide gold tables
+        # (championship_tracker) arrive here with mode=HISTORICAL
+        store.overwrite_partitions(observed, table)
+    # the fallback re-runs the unobserved transform; only a write that ran
+    # no tasks (a plan folded to an empty relation) leaves the metric
+    # unreadable, so it is a zero-row job
+    report.row_counts[table] = observed_or(obs, "rows", df.count)
 
 
 def run_bronze_to_silver(
@@ -237,7 +237,10 @@ def _incremental_drivers_merge(
     obs_rows = Observation("rows_drivers_silver_merge")
     merged = merged.observe(obs_rows, F.count(F.lit(1)).alias("rows"))
     store.overwrite(merged, "drivers_silver", expected=expected)
-    report.row_counts["drivers_silver"] = obs_rows.get["rows"]
+    # fallback: the full-table overwrite makes the table's count the merge's
+    report.row_counts["drivers_silver"] = observed_or(
+        obs_rows, "rows", lambda: store.read("drivers_silver").count()
+    )
 
 
 def validate_silver(store: TableStore) -> list:

@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 from f1_datalakehouse_pipeline_spark.plans.pipeline import (
     HISTORICAL,
     INCREMENTAL,
+    RunReport,
+    _write_observed,
     run_bronze_to_silver,
     run_silver_to_gold,
 )
@@ -448,3 +450,18 @@ def test_incremental_scope_accepts_unnormalized_slug(lakehouse, spark):
     # and the bronze-side partition filter actually selected the GP's rows
     # (not a silent empty batch): the batch re-wrote real race results
     assert report.row_counts.get("race_results_silver", 0) > 0
+
+
+def test_write_observed_empty_folded_write_records_zero(lakehouse, spark, tmp_path):
+    """A transform the optimizer folds to an empty relation still writes,
+    records ``row_counts[table] == 0`` and raises nothing; the
+    partition-scoped overwrite then replaces no partition."""
+    store = TableStore(spark, str(tmp_path / "warehouse"))
+    pits = lakehouse["store"].read("pitstops_silver")
+    report = RunReport(mode=INCREMENTAL, year=fx.YEAR, grand_prix=None)
+    _write_observed(store, pits, "pitstops_silver", HISTORICAL, report)
+    n = report.row_counts["pitstops_silver"]
+    assert n == pits.count() > 0
+    _write_observed(store, pits.filter(F.lit(False)), "pitstops_silver", INCREMENTAL, report)
+    assert report.row_counts["pitstops_silver"] == 0
+    assert store.read("pitstops_silver").count() == n

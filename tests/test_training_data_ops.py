@@ -2061,6 +2061,43 @@ def test_incremental_state_store_writes_are_sized(spark, tmp_path):
         assert len(files) == 1, (d, files)
 
 
+def test_observed_or_recomputes_only_unreadable_metrics(spark):
+    """observed_or returns an observed value as is and falls back to the
+    recompute for a NULL metric or an Observation that cannot be read —
+    never an assumed value."""
+    from pyspark.sql import Observation
+
+    from f1_datalakehouse_pipeline_spark.operators.util import observed_or
+
+    obs = Observation()
+    folded = spark.range(5).filter(F.lit(False)).observe(
+        obs, F.count(F.lit(1)).alias("n"), F.max("id").alias("max_id")
+    )
+    folded.localCheckpoint(eager=True)
+    assert observed_or(obs, "n", lambda: -1) == 0          # observed 0 is kept
+    assert observed_or(obs, "max_id", lambda: 42) == 42    # NULL: recomputed
+    assert observed_or(obs, "absent", lambda: 43) == 43    # no such metric
+
+    class Unreadable:
+        # stands in for an Observation whose metrics row cannot be
+        # converted (a stage that ran zero tasks records a schema-less row)
+        @property
+        def get(self):
+            raise ValueError("cannot convert an empty metrics row")
+
+    assert observed_or(Unreadable(), "n", lambda: 7) == 7
+
+
+def test_connected_keepers_empty_pairs(spark):
+    """No pairs: empty labels, no exception — the round's max over zero
+    rows is NULL, so the convergence decision recomputes from the round's
+    checkpoint instead of assuming one."""
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    labels = dedup.connected_keepers(pairs)
+    assert labels.columns == ["doc", "keeper"]
+    assert labels.collect() == []
+
+
 def test_connected_keepers_fused_probe_still_early_stops(spark):
     """r12 opt: the convergence probe rides an observed metric on the
     round's own checkpoint instead of a separate join+count action. The
@@ -2471,9 +2508,9 @@ def test_novelty_ingest_survives_shingle_less_first_batch(spark, tmp_path):
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2, 3}
 
 
-def test_corpus_pipeline_end_to_end(spark, tmp_path):
-    """The full corpus build: every hygiene stage removes exactly the rows
-    planted for it, and the delivered shards audit clean."""
+def _run_e2e_corpus(spark, out_root):
+    """The seven-doc corpus with one row planted per hygiene stage, built
+    by the batch pipeline into ``out_root``."""
     from f1_datalakehouse_pipeline_spark.plans.corpus import run_corpus_pipeline
 
     good = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -2491,10 +2528,10 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path):
         [(100, "benchmark question what is the capital of france answer paris")],
         ["doc_id", "text"],
     )
-    rep = run_corpus_pipeline(
+    return run_corpus_pipeline(
         spark,
         docs,
-        str(tmp_path / "corpus_out"),
+        out_root,
         benchmark=bench,
         quality_min=0.5,
         near_threshold=0.5,
@@ -2503,6 +2540,12 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path):
         n_shards=4,
         seed="e0",
     )
+
+
+def test_corpus_pipeline_end_to_end(spark, tmp_path):
+    """The full corpus build: every hygiene stage removes exactly the rows
+    planted for it, and the delivered shards audit clean."""
+    rep = _run_e2e_corpus(spark, str(tmp_path / "corpus_out"))
     assert rep.counts["raw"] == 7
     assert rep.counts["after_quality"] == 6          # doc 5 gone
     assert rep.counts["after_exact_dedup"] == 5      # doc 2 gone
@@ -2518,6 +2561,26 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path):
         r.chunk_text for r in read_training_shards(spark, str(tmp_path / "corpus_out")).collect()
     )
     assert "alice@example.com" not in delivered and "<EMAIL>" in delivered
+
+
+def test_corpus_pipeline_job_count_ceiling(spark, tmp_path):
+    """Pins the batch build's Spark job count on the end-to-end fixture
+    (host-stable, unlike wall time). Each stage is ONE eager checkpoint
+    whose own action also yields the stage count, so the build ran 82-83
+    jobs with stage caches over the full lineage and 76-77 with the
+    lineage cut at every stage; a regression to extra actions per stage
+    trips this ceiling."""
+    sc = spark.sparkContext
+    group = "corpus-job-count"
+    sc.setJobGroup(group, "corpus pipeline job-count pin")
+    try:
+        rep = _run_e2e_corpus(spark, str(tmp_path / "corpus_out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert rep.counts["chunks"] > 0 and rep.audit_violations == 0
+    assert 0 < len(jobs) <= 77, len(jobs)
 
 
 def test_chunk_id_compose_guards(spark):
